@@ -12,11 +12,14 @@ query). Only engine extensions beyond the reference's attribute surface
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 from database_migrator_spark.session import get_session
 
 from .core import CLI_ATTRIBUTES, REQUIRED, Migrator
+from .jdbc import JdbcMigrator
+from .ledger import FileLedger
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -58,6 +61,21 @@ def main(argv: list[str] | None = None) -> int:
     if bool(args.database) == bool(args.jdbc_url):
         print("error: exactly one of --database / --jdbc-url is required", file=sys.stderr)
         return 2
+    if args.host or args.port:
+        print(
+            "error: --host/--port are not used; JDBC targets carry host and "
+            "port in --jdbc-url",
+            file=sys.stderr,
+        )
+        return 2
+    # check paths before starting Spark: a typo must not start a JVM or
+    # leave metastore_db/ and derby.log behind
+    if not os.path.isdir(args.migrations_dir):
+        print(f"error: migrations dir not found: {args.migrations_dir}", file=sys.stderr)
+        return 1
+    if args.schema_file and not os.path.isfile(args.schema_file):
+        print(f"error: schema file not found: {args.schema_file}", file=sys.stderr)
+        return 1
     common = dict(
         migrations_dir=args.migrations_dir,
         schema_file=args.schema_file,
@@ -67,35 +85,20 @@ def main(argv: list[str] | None = None) -> int:
         verbose=args.verbose,
         legacy_sql_match=args.legacy_sql_match,
     )
+    # catalog targets persist across processes only on the Hive/derby
+    # catalog; JDBC targets keep everything in the target database
+    spark = get_session("spark-migrate", persistent_catalog=not args.jdbc_url)
+    if args.ledger_dir:
+        common["ledger"] = FileLedger(spark, args.ledger_dir)
     if args.jdbc_url:
-        from .jdbc import JdbcMigrator
-
-        spark = get_session("spark-migrate")
         props = {}
         if args.username:
             props["user"] = args.username
         if args.password:
             props["password"] = args.password
-        if args.ledger_dir:
-            from .ledger import FileLedger
-
-            common["ledger"] = FileLedger(spark, args.ledger_dir)
         m = JdbcMigrator(spark, jdbc_url=args.jdbc_url, jdbc_properties=props, **common)
     else:
-        spark = get_session("spark-migrate", persistent_catalog=True)
-        if args.ledger_dir:
-            from .ledger import FileLedger
-
-            common["ledger"] = FileLedger(spark, args.ledger_dir)
         m = Migrator(spark, database=args.database, **common)
-    import os
-
-    if not os.path.isdir(args.migrations_dir):
-        print(f"error: migrations dir not found: {args.migrations_dir}", file=sys.stderr)
-        return 1
-    if args.schema_file and not os.path.isfile(args.schema_file):
-        print(f"error: schema file not found: {args.schema_file}", file=sys.stderr)
-        return 1
     try:
         if args.verb in ("plan", "status"):
             pending = m.pending_migrations()

@@ -1,14 +1,18 @@
-"""The migration engine (SURVEY.md §2A #1-#21), Spark-first.
+"""The migration engine (SURVEY.md §2A #1-#21).
 
 The single piece of query logic in the reference is the pending set
 (Core.pm:215-235):
 
     pending = sort_numeric_or_alpha( subdirs(migrations_dir) − applied )
 
-which is literally a DataFrame left-anti join + orderBy here. Everything
-else is ordered driver-side orchestration — deliberately so: migrations
-are sequential by contract (Core.pm:158-162), so the loop must never be
-parallelized across migrations.
+Its inputs are directory names — a few thousand at most, whatever the
+data scale — so it is a driver-side set difference: the ledger is read
+once into a Python set (the reference's ``%ran`` hash) and the remaining
+subdirectories are sorted with ``numeric_or_alpha_key``, the same key
+that orders the files inside a migration. Everything else is ordered
+driver-side orchestration — deliberately so: migrations are sequential by
+contract (Core.pm:158-162), so the loop must never be parallelized across
+migrations.
 """
 
 from __future__ import annotations
@@ -19,11 +23,11 @@ import subprocess
 from contextlib import contextmanager
 from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from .ddl import run_ddl_script
 from .ledger import CatalogLedger, Ledger
-from .model import FileKind, Migration, MigrationFile, numeric_or_alpha_cols, scan_migration
+from .model import FileKind, Migration, MigrationFile, numeric_or_alpha_key, scan_migration
 
 
 class MigrationError(RuntimeError):
@@ -49,8 +53,8 @@ CLI_ATTRIBUTES: tuple[tuple[str, str, object, str, tuple[str, ...]], ...] = (
     ("migration_table", "str", "applied_migration", "ledger table name", ()),
     ("username", "str", None, "connection user (JDBC targets)", ("user",)),
     ("password", "str", None, "connection password (JDBC targets)", ()),
-    ("host", "str", None, "connection host (JDBC targets)", ()),
-    ("port", "str", None, "connection port (JDBC targets)", ()),
+    ("host", "str", None, "rejected: JDBC targets carry the host in --jdbc-url", ()),
+    ("port", "str", None, "rejected: JDBC targets carry the port in --jdbc-url", ()),
     ("dry_run", "flag", False, "log every step without executing", ()),
     ("quiet", "flag", False, "log errors only", ()),
     ("verbose", "flag", False, "debug logging", ()),
@@ -121,31 +125,23 @@ class Migrator:
     def _database_exists(self) -> bool:
         return self.spark.catalog.databaseExists(self.database)
 
-    # -- pending set: scan → anti-join → sort (Core.pm:215-235) -------------
-    def _migration_dirs_df(self) -> DataFrame:
+    # -- pending set: scan − applied, sorted (Core.pm:215-235) ---------------
+    def pending_migrations(self) -> list[Migration]:
+        # absent ledger table ⇒ applied = ∅ (Migrator.pm:155-162)
+        applied = (
+            {r[0] for r in self.ledger.applied_df().collect()}
+            if self.ledger.exists()
+            else set()
+        )
         names = [
             e.name
             for e in os.scandir(self.migrations_dir)
-            if e.is_dir() and not e.name.startswith(".")  # Core.pm:232-233
+            # Core.pm:232-233: non-hidden subdirectories only
+            if e.is_dir() and not e.name.startswith(".") and e.name not in applied
         ]
-        return self.spark.createDataFrame(
-            [(n,) for n in names] or self.spark.sparkContext.emptyRDD(), "name string"
-        )
-
-    def pending_migrations(self) -> list[Migration]:
-        dirs = self._migration_dirs_df()
-        if self.ledger.exists():
-            applied = self.ledger.applied_df()
-            pending = dirs.join(
-                applied, dirs["name"] == applied["migration"], "left_anti"
-            )
-        else:
-            # absent ledger table ⇒ applied = ∅ (Migrator.pm:155-162)
-            pending = dirs
-        ordered = [r["name"] for r in pending.orderBy(*numeric_or_alpha_cols("name")).collect()]
         return [
             scan_migration(os.path.join(self.migrations_dir, n), self.legacy_sql_match)
-            for n in ordered
+            for n in sorted(names, key=numeric_or_alpha_key)
         ]
 
     @property
@@ -158,7 +154,9 @@ class Migrator:
         """Run with ``self.database`` as the current database so unqualified
         DDL in schema/migration files lands in the right namespace."""
         prev = self.spark.catalog.currentDatabase()
-        if self.spark.catalog.databaseExists(self.database):
+        # the memo, not a fresh probe: create_database keeps it truthful,
+        # and a dry run leaves it False (nothing to switch into)
+        if self._database_exists:
             self.spark.catalog.setCurrentDatabase(self.database)
         try:
             yield
@@ -169,10 +167,7 @@ class Migrator:
         if not self._database_exists:
             self.logger.info("creating database %s", self.database)
             if not self.dry_run:
-                self.spark.sql(f"CREATE DATABASE `{self.database}`")
-                # keep the memoized probe truthful for subsequent calls on
-                # this instance (retry loops, library use)
-                self.__dict__["_database_exists"] = True
+                self.create_database()
             if self.schema_file:
                 self.logger.info("running schema DDL from %s", self.schema_file)
                 with self._in_database():
@@ -181,8 +176,15 @@ class Migrator:
             self.logger.debug("database %s already exists", self.database)
         self._run_migrations()
 
+    def create_database(self) -> None:  # Core.pm:26-31 required method
+        self.spark.sql(f"CREATE DATABASE `{self.database}`")
+        # keep the memoized probe truthful for subsequent calls on this
+        # instance (retry loops, library use, _in_database)
+        self.__dict__["_database_exists"] = True
+
     def drop_database(self) -> None:  # test harness support (Core.pm:29)
         self.spark.sql(f"DROP DATABASE IF EXISTS `{self.database}` CASCADE")
+        self.__dict__.pop("_database_exists", None)
 
     # -- apply loop: strictly ordered (Core.pm:158-162) -----------------------
     def _run_migrations(self) -> None:

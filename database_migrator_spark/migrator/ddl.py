@@ -22,6 +22,8 @@ import re
 
 from pyspark.sql import SparkSession
 
+from .connection import jdbc_connection
+
 logger = logging.getLogger("database_migrator_spark.ddl")
 
 
@@ -172,25 +174,16 @@ def run_ddl_script_jdbc(
 ) -> list[str]:
     """JDBC pass-through DDL: statements go to the target DBMS verbatim —
     no dialect shim — mirroring the reference's delegation of `.sql` files
-    to the database's own utility (README.md:38-39, Core.pm:176-179).
-    Uses java.sql.DriverManager through the session JVM (Spark's DataFrame
-    JDBC API cannot execute arbitrary DDL)."""
+    to the database's own utility (README.md:38-39, Core.pm:176-179)."""
     stmts = split_statements(script)
     if dry_run:
         return stmts
-    jvm = spark._jvm  # noqa: SLF001
-    props = jvm.java.util.Properties()
-    for k, v in (properties or {}).items():
-        props.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(url, props)
-    try:
+    with jdbc_connection(spark, url, properties) as conn:
         st = conn.createStatement()
         for stmt in stmts:
             logger.debug("JDBC DDL: %s", stmt)
             st.execute(stmt)
         st.close()
-    finally:
-        conn.close()
     return stmts
 
 

@@ -13,13 +13,17 @@ its driver jar on the classpath.
 
 from __future__ import annotations
 
+import re
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+from .connection import jdbc_connection
 from .core import Migrator
 from .ddl import run_ddl_script_jdbc
 from .ledger import JdbcLedger
+
+_CREATE_ATTR = re.compile(r";create=[^;]*")
 
 
 class JdbcMigrator(Migrator):
@@ -51,51 +55,28 @@ class JdbcMigrator(Migrator):
         )
 
     # -- existence probe: lazy try-connect (Core.pm:65-71, 252-257) ----------
-    def _jprops(self):
-        jvm = self.spark._jvm  # noqa: SLF001
-        props = jvm.java.util.Properties()
-        for k, v in self.jdbc_properties.items():
-            props.setProperty(k, v)
-        return props
-
     @property
     def _database_exists(self) -> bool:  # type: ignore[override]
-        jvm = self.spark._jvm  # noqa: SLF001
+        # strip the create attribute so probing never creates the database;
+        # Derby attribute names are case-sensitive but values are not
+        probe_url = _CREATE_ATTR.sub("", self.jdbc_url)
         try:
-            # strip create flags so probing doesn't create the database
-            probe_url = self.jdbc_url.replace(";create=true", "")
-            jvm.java.sql.DriverManager.getConnection(probe_url, self._jprops()).close()
-            return True
+            with jdbc_connection(self.spark, probe_url, self.jdbc_properties):
+                return True
         except Exception:
             return False
 
     # -- create: connect with the (create-capable) URL ------------------------
     def create_database(self) -> None:
-        jvm = self.spark._jvm  # noqa: SLF001
-        jvm.java.sql.DriverManager.getConnection(self.jdbc_url, self._jprops()).close()
-
-    def create_or_update_database(self) -> None:  # Core.pm:141-156
-        if not self._database_exists:
-            self.logger.info("creating database %s", self.jdbc_url)
-            if not self.dry_run:
-                self.create_database()
-            if self.schema_file:
-                self.logger.info("running schema DDL from %s", self.schema_file)
-                self._run_ddl_file(self.schema_file)
-        else:
-            self.logger.debug("database already exists")
-        self._run_migrations()
+        with jdbc_connection(self.spark, self.jdbc_url, self.jdbc_properties):
+            pass
 
     def run_sql(self, stmt: str):  # type: ignore[override]
         """Pass-through execution on the target DBMS (no Spark dialect)."""
-        jvm = self.spark._jvm  # noqa: SLF001
-        conn = jvm.java.sql.DriverManager.getConnection(self.jdbc_url, self._jprops())
-        try:
+        with jdbc_connection(self.spark, self.jdbc_url, self.jdbc_properties) as conn:
             st = conn.createStatement()
             st.execute(stmt)
             st.close()
-        finally:
-            conn.close()
 
     # -- pass-through DDL ------------------------------------------------------
     def _run_ddl_file(self, path: str) -> None:

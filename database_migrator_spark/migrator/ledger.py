@@ -30,6 +30,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .connection import jdbc_connection
+
 
 class Ledger(abc.ABC):
     @abc.abstractmethod
@@ -173,12 +175,7 @@ class JdbcLedger(Ledger):
         # error whose message happens to contain 'not found' must RAISE,
         # never silently classify as 'ledger missing'. Connectivity errors
         # propagate from getConnection itself.
-        jvm = self.spark._jvm  # noqa: SLF001
-        props = jvm.java.util.Properties()
-        for k, v in self.properties.items():
-            props.setProperty(k, v)
-        conn = jvm.java.sql.DriverManager.getConnection(self.url, props)
-        try:
+        with jdbc_connection(self.spark, self.url, self.properties) as conn:
             meta = conn.getMetaData()
             # unquoted identifiers are stored case-folded per DBMS (Derby/
             # Oracle upper, Postgres lower) — probe the plausible foldings.
@@ -196,8 +193,6 @@ class JdbcLedger(Ledger):
                 finally:
                     rs.close()
             return False
-        finally:
-            conn.close()
 
     def applied_df(self) -> DataFrame:
         from pyspark.sql import functions as F

@@ -5,6 +5,7 @@ sort/dispatch edge cases from SURVEY.md §7 risk 4."""
 from __future__ import annotations
 
 import os
+import random
 import stat
 import uuid
 
@@ -12,6 +13,7 @@ import pytest
 
 from database_migrator_spark.migrator.core import MigrationError, Migrator
 from database_migrator_spark.migrator.ddl import split_statements, translate_statement
+from database_migrator_spark.migrator.ledger import CatalogLedger, FileLedger
 from database_migrator_spark.migrator.model import (
     classify_file,
     numeric_or_alpha_key,
@@ -135,13 +137,75 @@ def test_full_harness_scenario(spark, tree):
         m.drop_database()
 
 
-def test_pending_set_is_anti_join(spark, tree):
+# Adversarial directory names: numeric-prefix ties, missing prefixes,
+# all-digit names, 11-digit numbers, dots and mixed case.
+_rng = random.Random(7)
+PENDING_CORPUS = {
+    n
+    for n in [
+        "01-first", "01-bar", "01-foo", "1-one", "2-two", "10-ten", "0",
+        "alpha", "Alpha", "-dash", "001-padded", "99999999999-big", "3.14-pi",
+        "_u", "01", "010", "10a", "10A", "a10",
+    ]
+    + ["".join(_rng.choices("abcXYZ0123456789-._", k=_rng.randint(1, 12))) for _ in range(150)]
+    if not n.startswith(".")
+}
+
+
+def test_pending_set_is_anti_join(spark, tree, tmp_path):
     db = f"migtest_{uuid.uuid4().hex[:8]}"
     m = _migrator(spark, tree, database=db)
     try:
         assert [p.name for p in m.pending_migrations()] == ["01-first", "02-second"]
         m.create_or_update_database()
         assert _migrator(spark, tree, database=db).pending_migrations() == []
+    finally:
+        m.drop_database()
+
+    # pending = corpus − applied, in key order; a hidden directory and a
+    # plain file are never migrations, and an applied name with no
+    # directory is simply absent
+    mig = tmp_path / "corpus"
+    for n in PENDING_CORPUS:
+        (mig / n).mkdir(parents=True)
+    (mig / ".hidden").mkdir()
+    (mig / "05-plain-file.sql").write_text("")
+    applied = {"01-bar", "1-one", "10A", "99999999999-big", "gone-from-disk"}
+    expected = sorted(PENDING_CORPUS - applied, key=numeric_or_alpha_key)
+
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    spark.sql(f"CREATE DATABASE {db}")
+    spark.sql(f"CREATE TABLE {db}.applied_migration (migration STRING)")
+    ledgers = [
+        CatalogLedger(spark, f"{db}.applied_migration"),
+        FileLedger(spark, str(tmp_path / "ledger")),
+    ]
+    try:
+        for ledger in ledgers:
+            for name in applied:
+                ledger.record(name)
+            m = Migrator(spark, db, str(mig), quiet=True, ledger=ledger)
+            assert [p.name for p in m.pending_migrations()] == expected, type(ledger)
+    finally:
+        spark.sql(f"DROP DATABASE {db} CASCADE")
+
+
+def test_status_call_runs_at_most_one_spark_job(spark, tree):
+    """A status call on a catalog ledger reads the ledger once (one Spark
+    job); the set difference and the sort run on the driver."""
+    db = f"migtest_{uuid.uuid4().hex[:8]}"
+    m = _migrator(spark, tree, database=db)
+    sc = spark.sparkContext
+    try:
+        m.create_or_update_database()
+        group = f"status-{db}"
+        sc.setJobGroup(group, group)
+        try:
+            assert _migrator(spark, tree, database=db).has_pending_migrations == 0
+        finally:
+            sc._jsc.clearJobGroup()  # noqa: SLF001
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # noqa: SLF001
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
     finally:
         m.drop_database()
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from database_migrator_spark.migrator import cli
 from database_migrator_spark.migrator.cli import build_parser, main
 from database_migrator_spark.migrator.core import CLI_ATTRIBUTES, REQUIRED
 
@@ -75,3 +76,29 @@ def test_exactly_one_target_required_exit_2(capsys):
         ["plan", "--migrations-dir", "/m", "--database", "d", "--jdbc-url", "jdbc:derby:x"]
     )
     assert rc == 2
+    assert "exactly one" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("flag", ["--host", "--port"])
+def test_host_and_port_are_rejected_exit_2(capsys, flag):
+    rc = main(["plan", "--jdbc-url", "jdbc:derby:x", "--migrations-dir", "/m", flag, "h"])
+    assert rc == 2
+    assert "--jdbc-url" in capsys.readouterr().err
+
+
+def test_missing_paths_fail_before_spark_starts(capsys, monkeypatch, tmp_path):
+    def no_session(*_a, **_kw):
+        raise AssertionError("Spark session started before the path checks")
+
+    monkeypatch.setattr(cli, "get_session", no_session)
+    rc = main(["plan", "--database", "d", "--migrations-dir", str(tmp_path / "missing")])
+    assert rc == 1
+    assert "migrations dir not found" in capsys.readouterr().err
+    rc = main(
+        [
+            "migrate", "--database", "d", "--migrations-dir", str(tmp_path),
+            "--schema-file", str(tmp_path / "missing.sql"),
+        ]
+    )
+    assert rc == 1
+    assert "schema file not found" in capsys.readouterr().err

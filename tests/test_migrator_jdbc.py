@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from database_migrator_spark.migrator.jdbc import JdbcMigrator
+from database_migrator_spark.migrator.ledger import JdbcLedger
 
 SCHEMA_SQL = """
 CREATE TABLE applied_migration (
@@ -68,3 +69,23 @@ def test_jdbc_migrator_end_to_end(spark, tree, tmp_path):
     m2.create_or_update_database()
     applied2 = sorted(r[0] for r in m2.ledger.applied_df().collect())
     assert applied2 == applied
+
+
+def test_existence_probe_ignores_create_value_case(spark, tree, tmp_path):
+    """Derby attribute values are case-insensitive: probing a
+    ``;create=True`` URL must neither create the database nor skip the
+    schema file."""
+    url = f"jdbc:derby:{tmp_path}/jmdb_case;create=True"
+    m = JdbcMigrator(
+        spark,
+        jdbc_url=url,
+        migrations_dir=str(tree / "migrations"),
+        schema_file=str(tree / "schema.sql"),
+        quiet=True,
+    )
+    assert not m._database_exists
+    assert not (tmp_path / "jmdb_case").exists()
+    m.create_or_update_database()
+    for table in ("applied_migration", "foo", "bar"):
+        assert JdbcLedger(spark, url, table).exists(), table
+    assert sorted(r[0] for r in m.ledger.applied_df().collect()) == ["01-first", "02-second"]

@@ -60,30 +60,6 @@ def test_split_statements_preserves_literal_content(fragments):
         assert f"('{lit}')" in stmt
 
 
-def test_spark_expression_key_matches_python_key(spark):
-    """The DataFrame orderBy expression (numeric_or_alpha_cols) and the
-    Python key must induce the same order — one batched comparison over an
-    adversarial name corpus (ties, no-prefix, big numbers, dots/unicode)."""
-    import random
-
-    from database_migrator_spark.migrator.model import numeric_or_alpha_cols
-
-    rng = random.Random(7)
-    corpus = [
-        "01-first", "01-bar", "01-foo", "1-one", "2-two", "10-ten", "0",
-        "alpha", "Alpha", "-dash", "001-padded", "99999999999-big", "3.14-pi",
-        "_u", "01", "010", "10a", "10A", "a10", "",
-    ] + [
-        "".join(rng.choices("abcXYZ0123456789-._", k=rng.randint(1, 12))) for _ in range(150)
-    ]
-    corpus = [c for c in set(corpus) if c]
-    df = spark.createDataFrame([(n,) for n in corpus], "name string")
-    spark_order = [r["name"] for r in df.orderBy(*numeric_or_alpha_cols("name")).collect()]
-    py_keys = [numeric_or_alpha_key(n) for n in spark_order]
-    # Spark's order must be non-decreasing under the Python key
-    assert all(a <= b for a, b in zip(py_keys, py_keys[1:]))
-
-
 @given(_name, _name)
 @settings(max_examples=200, deadline=None)
 def test_sort_ties_break_alphabetically_on_suffix(prefix_digits, _unused):

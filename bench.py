@@ -34,7 +34,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from database_migrator_spark.plans.registry import all_queries  # noqa: E402
 from database_migrator_spark.session import get_session  # noqa: E402
-from database_migrator_spark.sources import table  # noqa: E402
+from database_migrator_spark.sources import table, warm_substrates  # noqa: E402
 
 
 def _warm_streaming(spark) -> None:
@@ -108,51 +108,15 @@ def main() -> None:
 
     # warm-up: JVM, parquet footer caches, codegen
     table(spark, sf_dir, "lineitem").count()
-    # Ingest-time artifact builds (IVF index, BPE merge training) are
-    # warmed here so the per-query numbers measure QUERY cost — but their
-    # wall clock is real work a fresh deployment pays once, so it is
-    # reported under dedicated keys ("ingest") rather than silently
-    # excluded: without this, q35/q53/q106/q107's timings would read as
-    # end-to-end cost when they are actually index/tokenizer lookups.
-    ingest: dict[str, float] = {}
-    from database_migrator_spark.operators.similarity import _ivf_index_cached
-
-    t0 = time.perf_counter()
-    _ivf_index_cached(spark, sf_dir)
-    ingest["ivf_fit"] = round(time.perf_counter() - t0, 2)
-    from database_migrator_spark.operators.bpe import bpe_train_cached
-
-    t0 = time.perf_counter()
-    bpe_train_cached(spark, sf_dir, 10)
-    ingest["bpe_fit"] = round(time.perf_counter() - t0, 2)
-    from database_migrator_spark.operators.similarity import pq_fit_cached
-
-    t0 = time.perf_counter()
-    pq_fit_cached(spark, sf_dir)
-    ingest["pq_fit"] = round(time.perf_counter() - t0, 2)
-    from database_migrator_spark.operators.dedup import neardup_components_cached
-
-    t0 = time.perf_counter()
-    neardup_components_cached(spark, sf_dir)
-    ingest["cc_fit"] = round(time.perf_counter() - t0, 2)
-    from database_migrator_spark.operators.textops import doc_shingles_cached
-
-    t0 = time.perf_counter()
-    doc_shingles_cached(spark, sf_dir)
-    ingest["gram_fit"] = round(time.perf_counter() - t0, 2)
-    # round-8 session substrates: the retrieval family's tf table and
-    # the bitmap family's day-words fold — same once-per-deployment
-    # semantics as the artifacts above
-    from database_migrator_spark.operators.textops import doc_term_frequencies
-
-    t0 = time.perf_counter()
-    doc_term_frequencies(spark, sf_dir)
-    ingest["tf_fit"] = round(time.perf_counter() - t0, 2)
-    from database_migrator_spark.operators.bitmapops import day_user_words
-
-    t0 = time.perf_counter()
-    day_user_words(spark, sf_dir)
-    ingest["daywords_fit"] = round(time.perf_counter() - t0, 2)
+    # Session substrates (IVF index, BPE merges, MinHash sketch, tf table,
+    # ... — every entry of sources.SUBSTRATES, registered when all_queries()
+    # imports the operator modules) are built here so the per-query numbers
+    # measure QUERY cost — but their wall clock is real work a fresh
+    # deployment pays once, so it is reported under dedicated keys
+    # ("ingest", one "<name>_fit" per substrate) rather than silently
+    # excluded.
+    benched = {n: dq for n, dq in all_queries().items() if dq.bench}
+    ingest = warm_substrates(spark, sf_dir)
     # spin up the Arrow/pandas worker pool once so the first pandas-UDF
     # query isn't charged Python worker startup
     def _warm(batches):
@@ -197,7 +161,6 @@ def main() -> None:
         # (the r7 broad-drift suspect, docs/ROUND8_NOTES.md).
         gc.collect()
 
-    benched = {n: dq for n, dq in all_queries().items() if dq.bench}
     loop_start = time.perf_counter()
     # Pass 1: catalog order — methodologically identical to every prior
     # round's single pass (its per-query map is preserved in

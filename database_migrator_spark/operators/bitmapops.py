@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from database_migrator_spark.plans.registry import query
-from database_migrator_spark.sources import table
+from database_migrator_spark.sources import substrate, table
 
 
 def user_bitmap_words(events: DataFrame, *keys) -> DataFrame:
@@ -57,26 +57,14 @@ def popcount(words: DataFrame, *keys) -> DataFrame:
 
 
 # (day, word) bitmap fold shared by q190 (retention) and q198
-# (stickiness) — one corpus shuffle per (session, sf_dir), the
-# dense_hourly_counts / doc_term_frequencies caching pattern.
-_DAY_WORDS_CACHE: dict = {}
-
-
+# (stickiness) — one corpus shuffle per session, the dense_hourly_counts /
+# doc_term_frequencies substrate pattern.
+@substrate("daywords", "events")
 def day_user_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _DAY_WORDS_CACHE if k[0] != app]:
-        del _DAY_WORDS_CACHE[stale]
-    key = (app, _os.path.abspath(sf_dir))
-    df = _DAY_WORDS_CACHE.get(key)
-    if df is None:
-        e = table(spark, sf_dir, "events")
-        df = user_bitmap_words(
-            e.select(F.date_trunc("day", "ts").alias("d"), "user_id"), "d"
-        ).localCheckpoint(eager=True)  # corpus shuffled once, here
-        _DAY_WORDS_CACHE[key] = df
-    return df
+    e = table(spark, sf_dir, "events")
+    return user_bitmap_words(
+        e.select(F.date_trunc("day", "ts").alias("d"), "user_id"), "d"
+    ).localCheckpoint(eager=True)  # corpus shuffled once, here
 
 
 @query(

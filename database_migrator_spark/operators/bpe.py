@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from database_migrator_spark.operators.dedup import tokens_of
 from database_migrator_spark.plans.registry import query
-from database_migrator_spark.sources import spread_for_cpu, table
+from database_migrator_spark.sources import spread_for_cpu, substrate, table
 
 # end-of-word sentinel (GPT-2 style "</w>") so merges can span to word
 # boundaries and the learned units distinguish "er" mid-word from "er"
@@ -135,21 +135,10 @@ def bpe_train(
 
 
 # trained merge lists are ingest-time artifacts (like the IVF index) —
-# cache per (application, sf_dir, n_merges) so q106/q107 share one
-# training run within a session; entries from stopped sessions evict
-_MERGES_CACHE: dict[tuple[str, str, int], list[tuple[int, str, str, int]]] = {}
-
-
-def bpe_train_cached(
-    spark: SparkSession, sf_dir: str, n_merges: int
-) -> list[tuple[int, str, str, int]]:
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _MERGES_CACHE if k[0] != app]:
-        del _MERGES_CACHE[stale]
-    key = (app, sf_dir, n_merges)
-    if key not in _MERGES_CACHE:
-        _MERGES_CACHE[key] = bpe_train(table(spark, sf_dir, "documents"), n_merges)
-    return _MERGES_CACHE[key]
+# the session substrate "bpe", so q106/q107 share one 10-merge training run
+@substrate("bpe", "documents")
+def bpe_train_cached(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, int]]:
+    return bpe_train(table(spark, sf_dir, "documents"), 10)
 
 
 def bpe_segment(syms_df: DataFrame) -> DataFrame:
@@ -261,7 +250,7 @@ def q106_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer training is ingest-time work like ivf_fit). Deterministic
     by (count DESC, pair ASC) tie-break, so the driver's rows-only gate
     sees a stable table. Symbols render the NUL sentinel as '</w>'."""
-    merges = bpe_train_cached(spark, sf_dir, n_merges=10)
+    merges = bpe_train_cached(spark, sf_dir)
     return spark.createDataFrame(
         [
             (int(r), a.replace(EOW, EOW_DISPLAY), b.replace(EOW, EOW_DISPLAY), int(c))
@@ -288,7 +277,7 @@ def q107_bpe_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     words = word_histogram(d)
     syms = _initial_symbols(words).localCheckpoint(eager=True)
-    for _, a, b, _cnt in bpe_train_cached(spark, sf_dir, n_merges=10):
+    for _, a, b, _cnt in bpe_train_cached(spark, sf_dir):
         syms = syms.select(
             "word", "n", _apply_merge(F.col("syms"), a, b).alias("syms")
         ).localCheckpoint(eager=True)
@@ -349,7 +338,7 @@ def q116_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     words = word_histogram(d)
     syms = _initial_symbols(words).localCheckpoint(eager=True)
-    for _, a, b, _cnt in bpe_train_cached(spark, sf_dir, n_merges=10):
+    for _, a, b, _cnt in bpe_train_cached(spark, sf_dir):
         syms = syms.select(
             "word", "n", _apply_merge(F.col("syms"), a, b).alias("syms")
         ).localCheckpoint(eager=True)

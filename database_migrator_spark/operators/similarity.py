@@ -17,7 +17,6 @@ Hyperplanes are generated from a fixed seed and inlined as literal arrays
 from __future__ import annotations
 
 import os
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -34,7 +33,8 @@ from database_migrator_spark.functions.vector import (
     l2_norm_sq,
 )
 from database_migrator_spark.plans.registry import query
-from database_migrator_spark.sources import spread_for_cpu, table
+from database_migrator_spark.scratch import scratch_dir
+from database_migrator_spark.sources import spread_for_cpu, substrate, table
 
 _DIM = 64
 # SRP bucket-count tradeoff: 2^n_planes buckets should be ~N/100 so each
@@ -380,51 +380,19 @@ def ivf_topk(
     return _ivf_query(assigned, centroids, query_vec_id, k, n_probe, id_col, vec_col)
 
 
-_IVF_PROCESS_CACHE_ROOT: str | None = None
-
-
-def _ivf_process_cache_root() -> str:
-    """Per-PROCESS root for the IVF index cache.  r14 verdict item 6: the
-    old cross-run location (a stable /tmp path keyed on the test-data
-    fingerprint) let a later bench run inherit a previous run's fit, so
-    ``ingest.ivf_fit`` read 0.0 instead of the real cost.  A fresh
-    mkdtemp per process keeps the legitimate fit-once-per-deployment
-    amortization WITHIN a run (queries measure lookups, not fits — same
-    semantics as bpe/pq/cc) while every new bench/test process pays and
-    reports the true fit."""
-    global _IVF_PROCESS_CACHE_ROOT
-    if _IVF_PROCESS_CACHE_ROOT is None:
-        _IVF_PROCESS_CACHE_ROOT = tempfile.mkdtemp(prefix="spark_graft_ivf_")
-    return _IVF_PROCESS_CACHE_ROOT
-
-
-def _ivf_index_cached(spark: SparkSession, sf_dir: str, n_clusters: int = 16, seed: int = 42) -> str:
-    """Fit-once-per-process index cache for the declared query: the index
-    lives under a per-process temp dir keyed by (table, params, source
-    fingerprint) and is reused across invocations within the process —
-    the bench therefore measures the QUERY, with the fit amortized
-    exactly as a persisted production index would be, and reports the
-    one-time fit under ``ingest.ivf_fit``. The fingerprint (source file
-    mtime+size) makes a regenerated table invalidate the cache instead
-    of silently serving a stale index; the marker is written via atomic
-    rename so a crash mid-fit can never leave a valid-looking partial
-    index."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    fingerprint = f"{st.st_mtime_ns}-{st.st_size}"
-    base = os.path.join(
-        _ivf_process_cache_root(),
-        f"{os.path.basename(os.path.normpath(sf_dir))}-k{n_clusters}-s{seed}-{fingerprint}",
-    )
-    marker = os.path.join(base, "_INDEX_READY")
-    if not os.path.exists(marker):
-        e = table(spark, sf_dir, "embeddings")
-        ivf_fit(e, base, n_clusters=n_clusters, seed=seed)
-        tmp_marker = marker + ".tmp"
-        with open(tmp_marker, "w") as fh:
-            fh.write("ok")
-        os.replace(tmp_marker, marker)
-    return base
+@substrate("ivf", "embeddings")
+def _ivf_index_cached(spark: SparkSession, sf_dir: str) -> str:
+    """The declared query's persisted IVF index (16 clusters, seed 42),
+    fitted once per session into a process scratch directory (removed at
+    exit; dead processes' roots are swept — see ``scratch.py``) and reused
+    by every invocation — the bench therefore measures the QUERY, with
+    the fit amortized exactly as a persisted production index would be,
+    and reports the one-time fit under ``ingest.ivf_fit``. A rewritten
+    source table refits into the same directory (``ivf_fit`` overwrites);
+    the memo records the path only after the fit returns, so a crash
+    mid-fit leaves nothing that looks valid."""
+    index_dir = scratch_dir("ivf_index", os.path.abspath(sf_dir))
+    return ivf_fit(table(spark, sf_dir, "embeddings"), index_dir)
 
 
 @query(
@@ -434,9 +402,9 @@ def _ivf_index_cached(spark: SparkSession, sf_dir: str, n_clusters: int = 16, se
     tags=("similarity", "ann", "ivf", "E16"),
 )
 def q53_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-10 around vec_id=1 through the persisted index (fit once
-    per table into a temp-dir cache, amortized like a production index;
-    seeded KMeans keeps results reproducible)."""
+    """IVF top-10 around vec_id=1 through the persisted index (the "ivf"
+    session substrate, amortized like a production index; seeded KMeans
+    keeps results reproducible)."""
     index_dir = _ivf_index_cached(spark, sf_dir)
     return ivf_topk_indexed(spark, index_dir, query_vec_id=1, k=10)
 
@@ -791,54 +759,40 @@ def q109_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cut) — the standard layout for billion-scale ANN memories; search runs on
 # codes via asymmetric distance (ADC) lookup tables.
 
-_PQ_CACHE: dict[tuple, list[list[list[float]]]] = {}
-
-
-def pq_fit_cached(
-    spark: SparkSession,
-    sf_dir: str,
-    m: int = 8,
-    k: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Per-subspace KMeans codebooks (``m`` subspaces × ``k`` centroids),
-    cached per session like the IVF index and the BPE merges — PQ
-    training is ingest-time work a deployment runs once per corpus."""
+@substrate("pq", "embeddings")
+def pq_fit_cached(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
+    """Per-subspace KMeans codebooks (8 subspaces × 16 centroids, seed 42
+    + subspace), a session substrate like the IVF index and the BPE merges
+    — PQ training is ingest-time work a deployment runs once per corpus."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    app = spark.sparkContext.applicationId
-    for stale in [key for key in _PQ_CACHE if key[0] != app]:
-        del _PQ_CACHE[stale]
-    key = (app, sf_dir, m, k, seed)
-    if key not in _PQ_CACHE:
-        e = table(spark, sf_dir, "embeddings")
-        dim = len(e.select(vec_col).first()[0])
-        dsub = dim // m
+    m, k = 8, 16
+    e = table(spark, sf_dir, "embeddings")
+    dim = len(e.select("embedding").first()[0])
+    dsub = dim // m
 
-        def _fit(s: int) -> list[list[float]]:
-            sub = e.select(
-                array_to_vector(
-                    F.transform(
-                        F.slice(F.col(vec_col), s * dsub + 1, dsub),
-                        lambda x: x.cast("double"),
-                    )
-                ).alias("__v")
-            )
-            model = KMeans(k=k, seed=seed + s, featuresCol="__v").fit(sub)
-            return [[float(x) for x in c] for c in model.clusterCenters()]
+    def _fit(s: int) -> list[list[float]]:
+        sub = e.select(
+            array_to_vector(
+                F.transform(
+                    F.slice(F.col("embedding"), s * dsub + 1, dsub),
+                    lambda x: x.cast("double"),
+                )
+            ).alias("__v")
+        )
+        model = KMeans(k=k, seed=42 + s, featuresCol="__v").fit(sub)
+        return [[float(x) for x in c] for c in model.clusterCenters()]
 
-        # The m per-subspace fits are independent small jobs dominated by
-        # per-iteration scheduling latency, so overlap them from a driver
-        # thread pool (guide §2.6) — each fit's input partitioning and
-        # seed are unchanged, so the centroids are bit-identical to the
-        # former sequential loop; only the wall clock drops.
-        from concurrent.futures import ThreadPoolExecutor
+    # The m per-subspace fits are independent small jobs dominated by
+    # per-iteration scheduling latency, so overlap them from a driver
+    # thread pool (guide §2.6) — each fit's input partitioning and
+    # seed are unchanged, so the centroids are bit-identical to the
+    # former sequential loop; only the wall clock drops.
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            _PQ_CACHE[key] = list(pool.map(_fit, range(m)))
-    return _PQ_CACHE[key]
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        return list(pool.map(_fit, range(m)))
 
 
 def pq_encode(

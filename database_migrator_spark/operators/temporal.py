@@ -22,7 +22,7 @@ from database_migrator_spark.functions.exact import (
     to_cents,
 )
 from database_migrator_spark.plans.registry import query
-from database_migrator_spark.sources import table
+from database_migrator_spark.sources import substrate, table
 
 
 def asof_join(
@@ -1250,37 +1250,26 @@ def q169_top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-deriving it per branch re-SCANS the corpus per reference (measured:
 # q171's three lag-join branches × {hours, types, counts} = 9 full scans
 # — Catalyst does not reuse the aggregate exchange because each branch
-# projects it differently). So it is materialized ONCE per (session,
-# sf_dir) as a localCheckpoint — the corpus is touched exactly once no
-# matter how many consumers run; the ~3,600-row checkpoint is free.
-_DENSE_CACHE: dict = {}
-
-
+# projects it differently). So it is the session substrate "dense",
+# materialized ONCE per session as a localCheckpoint — the corpus is
+# touched exactly once no matter how many consumers run; the ~3,600-row
+# checkpoint is free.
+@substrate("dense", "events")
 def dense_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _DENSE_CACHE if k[0] != app]:
-        del _DENSE_CACHE[stale]
-    key = (app, _os.path.abspath(sf_dir))
-    df = _DENSE_CACHE.get(key)
-    if df is None:
-        e = table(spark, sf_dir, "events")
-        counts = (
-            e.groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
-            .agg(F.count("*").alias("c"))
-            .localCheckpoint(eager=True)  # corpus touched once, here
-        )
-        hours = counts.select("h").distinct()
-        types = counts.select("event_type").distinct()
-        df = (
-            hours.crossJoin(F.broadcast(types))
-            .join(F.broadcast(counts), ["h", "event_type"], "left")
-            .select("h", "event_type", F.coalesce("c", F.lit(0)).alias("c"))
-            .localCheckpoint(eager=True)
-        )
-        _DENSE_CACHE[key] = df
-    return df
+    e = table(spark, sf_dir, "events")
+    counts = (
+        e.groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
+        .agg(F.count("*").alias("c"))
+        .localCheckpoint(eager=True)  # corpus touched once, here
+    )
+    hours = counts.select("h").distinct()
+    types = counts.select("event_type").distinct()
+    return (
+        hours.crossJoin(F.broadcast(types))
+        .join(F.broadcast(counts), ["h", "event_type"], "left")
+        .select("h", "event_type", F.coalesce("c", F.lit(0)).alias("c"))
+        .localCheckpoint(eager=True)
+    )
 
 
 _DENSE_HOURLY_ORACLE = """

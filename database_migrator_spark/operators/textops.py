@@ -18,7 +18,7 @@ from database_migrator_spark.functions.exact import (
 )
 from database_migrator_spark.operators.dedup import tokens_of
 from database_migrator_spark.plans.registry import query
-from database_migrator_spark.sources import spread_for_cpu, table
+from database_migrator_spark.sources import spread_for_cpu, substrate, table
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 
@@ -741,7 +741,7 @@ def cooccurrence_pmi(
     # corpus (measured 7 scans). The pruned (doc_id, tok) stream is the
     # smallest corpus-sized representation (ints + short strings, far
     # smaller than the text it came from) — storing it once beats
-    # re-deriving it twice, the same trade the MinHash sketch cache
+    # re-deriving it twice, the same trade the MinHash sketch substrate
     # makes.
     dtp = (
         dt.join(F.broadcast(vocab.select("tok")), "tok")
@@ -778,29 +778,19 @@ def cooccurrence_pmi(
     )
 
 
-# The distinct-k-gram shingle table (doc_id, s array<string>) is the shared
-# substrate of decontamination (q98) and contamination attribution (q145) —
-# the same in-session amortization as dedup._SKETCH_CACHE; a production
-# pipeline persists the gram table at ingest next to the MinHash sketches
-# and refreshes it with the recrawl cadence. Keyed per application so
-# checkpoints die with their session.
-_GRAM_CACHE: dict[tuple, DataFrame] = {}
+# The distinct-8-gram shingle table (doc_id, s array<string>) is the shared
+# substrate of decontamination (q98) and contamination attribution (q145);
+# a production pipeline persists it at ingest next to the MinHash sketch
+# (``dedup.documents_sketch``) and refreshes it with the recrawl cadence.
+@substrate("gram", "documents")
+def doc_shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from database_migrator_spark.operators.dedup import word_shingles
 
-
-def doc_shingles_cached(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    for stale in [key for key in _GRAM_CACHE if key[0] != app]:
-        del _GRAM_CACHE[stale]
-    key = (app, sf_dir, k)
-    if key not in _GRAM_CACHE:
-        from database_migrator_spark.operators.dedup import word_shingles
-
-        d = spread_for_cpu(table(spark, sf_dir, "documents"))
-        _GRAM_CACHE[key] = d.select(
-            "doc_id",
-            F.array_distinct(word_shingles(tokens_of("text"), k)).alias("s"),
-        ).localCheckpoint(eager=True)
-    return _GRAM_CACHE[key]
+    d = spread_for_cpu(table(spark, sf_dir, "documents"))
+    return d.select(
+        "doc_id",
+        F.array_distinct(word_shingles(tokens_of("text"), 8)).alias("s"),
+    ).localCheckpoint(eager=True)
 
 
 def benchmark_decontamination(
@@ -870,7 +860,7 @@ def q98_benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
     pairwise work, which is what makes the scan affordable at 100 TB.
     Reads the shared shingle table (``doc_shingles_cached`` — built once
     per session, also consumed by q145's attribution drill-down)."""
-    sh = doc_shingles_cached(spark, sf_dir, k=8)
+    sh = doc_shingles_cached(spark, sf_dir)
     bench = (
         sh.where(F.col("doc_id") % 97 == 0).select(F.explode("s").alias("g")).distinct()
     )
@@ -1652,7 +1642,7 @@ def q145_contamination_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     benchmark doc — so attribution costs no more than detection, and
     both read the same once-per-session shingle table
     (``doc_shingles_cached``)."""
-    sh = doc_shingles_cached(spark, sf_dir, k=8)
+    sh = doc_shingles_cached(spark, sf_dir)
     bench = (
         sh.where(F.col("doc_id") % 97 == 0)
         .select(F.col("doc_id").alias("bench_doc_id"), F.explode("s").alias("g"))
@@ -1764,31 +1754,19 @@ def q187_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Lexical-retrieval substrate shared by q191 (BM25), q196 (QLD) and q197
 # (RRF fusion): the (doc_id, term, tf) table is the ONE corpus-sized
-# artifact of the family.  Like dense_hourly_counts, it is materialized
-# once per (session, sf_dir) as a localCheckpoint so however many
-# scorers run, the documents parquet is scanned exactly once.
+# artifact of the family.  Like dense_hourly_counts, it is a session
+# substrate (``sources.substrate``) materialized as a localCheckpoint so
+# however many scorers run, the documents parquet is scanned exactly once.
 # ---------------------------------------------------------------------------
-_TF_CACHE: dict = {}
-
-
+@substrate("tf", "documents")
 def doc_term_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _TF_CACHE if k[0] != app]:
-        del _TF_CACHE[stale]
-    key = (app, _os.path.abspath(sf_dir))
-    df = _TF_CACHE.get(key)
-    if df is None:
-        d = spread_for_cpu(table(spark, sf_dir, "documents"))
-        df = (
-            d.select("doc_id", F.explode(tokens_of("text")).alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").alias("tf"))
-            .localCheckpoint(eager=True)  # corpus touched once, here
-        )
-        _TF_CACHE[key] = df
-    return df
+    d = spread_for_cpu(table(spark, sf_dir, "documents"))
+    return (
+        d.select("doc_id", F.explode(tokens_of("text")).alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").alias("tf"))
+        .localCheckpoint(eager=True)  # corpus touched once, here
+    )
 
 
 #: the oracle-side mirror of the substrate + derived tables + the

@@ -8,7 +8,10 @@ collect, never infer schemas row-by-row.
 
 from __future__ import annotations
 
+import functools
 import os
+import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -59,17 +62,75 @@ def _pin_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def _table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table. Accepts either a single parquet file or a
     directory of part-files (the 100 TB layout)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _pin_session_confs(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = _table_path(sf_dir, name)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return _typed_events(spark.read.parquet(path))
     return spark.read.parquet(path)
+
+
+# Session substrates: derived tables (tf table, shingle table, IVF index,
+# MinHash sketch, ...) that several queries share.  Each is built once per
+# (Spark application, source table file) and reused until the application
+# changes or the source file is rewritten.  Production persists them at
+# ingest and refreshes them with the recrawl cadence; here they live for
+# one session, so localCheckpoints die with the application that made
+# them.  ``SUBSTRATES`` maps each ingest name to its memoized builder;
+# bench.py and the tools warm them with one loop over it.
+SUBSTRATES: dict[str, Callable[[SparkSession, str], object]] = {}
+# (substrate name, source abspath) -> ((app id, mtime_ns, size), value)
+_MEMO: dict[tuple[str, str], tuple[tuple, object]] = {}
+
+
+def substrate(name: str, source: str):
+    """Register ``build(spark, sf_dir)`` as the session substrate ``name``
+    derived from table ``source``: the first call builds, later calls in
+    the same application return the same object.  A new application id
+    evicts every other application's entries; a changed source file
+    (``st_mtime_ns`` or ``st_size``) rebuilds.  The memo stores a value
+    only after ``build`` returns, so a failed build leaves nothing."""
+
+    def register(build: Callable[[SparkSession, str], object]):
+        @functools.wraps(build)
+        def cached(spark: SparkSession, sf_dir: str):
+            app = spark.sparkContext.applicationId
+            for stale in [k for k, (stamp, _) in _MEMO.items() if stamp[0] != app]:
+                del _MEMO[stale]
+            path = os.path.abspath(_table_path(sf_dir, source))
+            st = os.stat(path)
+            stamp = (app, st.st_mtime_ns, st.st_size)
+            hit = _MEMO.get((name, path))
+            if hit is None or hit[0] != stamp:
+                hit = _MEMO[(name, path)] = (stamp, build(spark, sf_dir))
+            return hit[1]
+
+        SUBSTRATES[name] = cached
+        return cached
+
+    return register
+
+
+def warm_substrates(spark: SparkSession, sf_dir: str) -> dict[str, float]:
+    """Build every registered substrate for ``sf_dir`` and return each
+    build's wall seconds keyed ``<name>_fit``.  Substrates register when
+    their operator module is imported, so import the catalog
+    (``plans.registry.all_queries()``) first."""
+    fits: dict[str, float] = {}
+    for name, build in SUBSTRATES.items():
+        t0 = time.perf_counter()
+        build(spark, sf_dir)
+        fits[f"{name}_fit"] = round(time.perf_counter() - t0, 2)
+    return fits
 
 
 def spread_for_cpu(df: DataFrame, cap: int | None = None) -> DataFrame:
@@ -117,7 +178,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     exit — see scratch.py)."""
     from database_migrator_spark.scratch import scratch_dir
 
-    path = os.path.join(sf_dir, "events.parquet")
+    path = _table_path(sf_dir, "events")
     _pin_session_confs(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(path).schema

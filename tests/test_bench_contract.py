@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 
 from database_migrator_spark.plans.registry import all_queries
+from database_migrator_spark.sources import SUBSTRATES
 
 
 def test_short_query_keys_are_unique():
@@ -44,13 +45,7 @@ def test_bench_json_line_fits_tail_window():
             "queries": short,
             "sf": 0.1,
             "n_queries": len(short),
-            "ingest": {
-                "ivf_fit": 99.99,
-                "bpe_fit": 99.99,
-                "pq_fit": 99.99,
-                "cc_fit": 99.99,
-                "gram_fit": 99.99,
-            },
+            "ingest": {f"{name}_fit": 99.99 for name in SUBSTRATES},
             "sentinel_sec": [99.999, 99.999],
             "pass2_n": 999,
         }

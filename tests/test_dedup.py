@@ -123,8 +123,8 @@ def test_leakage_safe_split_property(spark):
     per-doc split (q93) would NOT have this property on the same pairs
     (the test is vacuous if the corpus has no cross-split-prone pair)."""
     from database_migrator_spark.operators.dedup import (
-        _documents_cache_key,
-        minhash_near_duplicates,
+        documents_sketch,
+        sketch_near_duplicates,
     )
     from database_migrator_spark.plans.registry import all_queries
     from database_migrator_spark.sources import table
@@ -133,10 +133,7 @@ def test_leakage_safe_split_property(spark):
     out = all_queries()["q115_leakage_safe_split"].build(spark, sf)
     d = table(spark, sf, "documents")
     assert out.count() == d.count()  # total assignment
-    pairs = minhash_near_duplicates(
-        d, num_hashes=64, bands=32, threshold=0.6,
-        cache_key=_documents_cache_key(sf),
-    )
+    pairs = sketch_near_duplicates(documents_sketch(spark, sf), bands=32, threshold=0.6)
     a = out.select(F.col("doc_id").alias("a_id"), F.col("split").alias("sa"))
     b = out.select(F.col("doc_id").alias("b_id"), F.col("split").alias("sb"))
     joined = pairs.join(a, "a_id").join(b, "b_id")
@@ -287,20 +284,17 @@ def test_neardup_triangles_match_python_closure(spark):
     from itertools import combinations
 
     from database_migrator_spark.operators.dedup import (
-        _documents_cache_key,
-        minhash_near_duplicates,
+        documents_sketch,
+        sketch_near_duplicates,
     )
     from database_migrator_spark.plans.registry import all_queries
-    from database_migrator_spark.sources import table
 
     from .conftest import SF_SMOKE
 
     pairs = {
         (r["a_id"], r["b_id"])
-        for r in minhash_near_duplicates(
-            table(spark, SF_SMOKE, "documents"),
-            num_hashes=64, bands=32, threshold=0.6,
-            cache_key=_documents_cache_key(SF_SMOKE),
+        for r in sketch_near_duplicates(
+            documents_sketch(spark, SF_SMOKE), bands=32, threshold=0.6
         ).collect()
     }
     adj = {}

@@ -24,7 +24,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from database_migrator_spark.plans.registry import all_queries  # noqa: E402
 from database_migrator_spark.session import get_session  # noqa: E402
-from database_migrator_spark.sources import table  # noqa: E402
+from database_migrator_spark.sources import table, warm_substrates  # noqa: E402
 
 
 def main() -> None:
@@ -66,26 +66,8 @@ def main() -> None:
     spark = get_session("qtime")
     table(spark, sf_dir, "lineitem").count()
 
-    # warm the cached substrates any targeted family relies on, same as bench
-    from database_migrator_spark.operators.bpe import bpe_train_cached
-    from database_migrator_spark.operators.bitmapops import day_user_words
-    from database_migrator_spark.operators.dedup import neardup_components_cached
-    from database_migrator_spark.operators.similarity import (
-        _ivf_index_cached,
-        pq_fit_cached,
-    )
-    from database_migrator_spark.operators.textops import (
-        doc_shingles_cached,
-        doc_term_frequencies,
-    )
-
-    _ivf_index_cached(spark, sf_dir)
-    bpe_train_cached(spark, sf_dir, 10)
-    pq_fit_cached(spark, sf_dir)
-    neardup_components_cached(spark, sf_dir)
-    doc_shingles_cached(spark, sf_dir)
-    doc_term_frequencies(spark, sf_dir)
-    day_user_words(spark, sf_dir)
+    # warm every session substrate, same as bench
+    warm_substrates(spark, sf_dir)
 
     def _warm(batches):
         yield from batches
